@@ -1,20 +1,15 @@
-#!/usr/bin/env python3
 """Per-layer metrics of a traced run, from its span file.
 
-run.py calls per_layer() for --trace 1 runs. Run directly, it prints the
-per-layer self-time table of a span file kept with PERFBENCH_KEEP:
-
-    python3 perfbench/report.py <work>/result.json <work>/spans.jsonl
-
-A span is one interval at a call boundary (run.py's harness records them;
-see Tracing.scala): operations (query, lookup, batch), a query's build and
-action, the Catalyst phases of each action, Spark jobs with their task
-counters, streaming progress, and the layer probes. A layer's self time is
-its span's duration minus the part its child spans cover.
+run.py calls per_layer() for --trace 1 runs. A span is one interval at a
+call boundary (run.py's harness records them; see Tracing.scala):
+operations (query, lookup, batch), a query's build and action, the
+untimed check after an operation (verify), the Catalyst phases of each
+action, Spark jobs with their task counters, streaming progress, and the
+layer probes. A layer's self time is its span's duration minus the part
+its child spans cover.
 """
 import json
 import statistics
-import sys
 from pathlib import Path
 
 import metrics
@@ -50,14 +45,15 @@ def load_spans(path):
     children = {}
     for s in spans:
         children.setdefault(s["parent"], []).append(s)
-    # every job and Catalyst phase belongs to the primary operation it ran
-    # in: by its job group when it has one, else (streaming batches run on
-    # the query's own thread) by time
+    # every job and Catalyst phase belongs to the span it ran in: by its
+    # job group when it has one, else (streaming batches run on the
+    # query's own thread) by time. Only the primary operations' own jobs
+    # count toward them; a check's jobs belong to its verify span
     for s in spans:
         if s["kind"] not in ("job", "catalyst"):
             continue
         owner = by_id.get(s["parent"])
-        while owner is not None and owner["kind"] not in PRIMARY + ("lookup", "probe"):
+        while owner is not None and owner["kind"] not in PRIMARY + ("lookup", "probe", "verify"):
             owner = by_id.get(owner["parent"])
         if owner is None:
             owner = next((o for o in ops if o["t0"] <= s["t0"] <= o["t1"]), None)
@@ -130,9 +126,11 @@ def per_layer(result, spans_path):
     out["self.catalyst_s"] = median([r["catalyst"] for r in rows])
     out["self.exec_s"] = median([r["exec"] for r in rows])
     out["self.other_s"] = median([r["other"] for r in rows])
-    # the traced split against the same operation's untraced median wall
+    # the attributed layers against the same operation's untraced median
+    # wall; the unattributed rest (other) is left out, so time no layer
+    # accounts for shows as a shortfall
     out["self.sum_vs_wall"] = median([
-        (r["build"] + r["catalyst"] + r["exec"] + r["other"])
+        (r["build"] + r["catalyst"] + r["exec"])
         / median(untraced[(r["name"], False)]) - 1
         for r in rows if untraced.get((r["name"], False))])
 
@@ -184,13 +182,3 @@ def per_layer(result, spans_path):
             out[k] = v
     return {k: float(out.get(k, 0.0)) for k in metrics.PER_LAYER}
 
-
-def main():
-    result = json.loads(Path(sys.argv[1]).read_text())
-    values = per_layer(result, sys.argv[2])
-    for k, v in values.items():
-        print(f"{k:45s} {v:14.4f}")
-
-
-if __name__ == "__main__":
-    main()

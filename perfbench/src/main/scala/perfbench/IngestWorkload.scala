@@ -20,11 +20,12 @@ import graft.streaming.ImportPipeline
   *
   * Closed loop: batch k+1 is staged only after batch k commits; a pass is
   * one compaction cycle of `MaxChain` batches. After each batch the
-  * client makes two rounds of catalog lookups (get of a key the batch
-  * touched, a get that must 404, and find-by-title). Every document's fate is
-  * planted by the generator: rule-invalid ids or versions, corrupt
-  * checksums and missing payloads, so the accept/quarantine split, the
-  * catalog read-back and each lookup are checked against known truth.
+  * client makes `LookupRounds` rounds of catalog lookups (get of a key
+  * the batch touched, a get that must 404, and find-by-title). Every
+  * document's fate is planted by the generator: rule-invalid ids or
+  * versions, corrupt checksums and missing payloads, so the
+  * accept/quarantine split, the catalog read-back and each lookup are
+  * checked against known truth.
   */
 final class IngestWorkload(ctx: Ctx) extends Workload {
   import IngestWorkload._
@@ -221,10 +222,10 @@ final class IngestWorkload(ctx: Ctx) extends Workload {
     compacted
   }.contains(true)
 
-  /** Two rounds of lookups after batch k, each about one doc it accepted. */
+  /** Rounds of lookups after batch k, each about one doc it accepted. */
   private def lookupOps(k: Int): Seq[Op] = {
     val rnd = new Random(ctx.seed * 104729L + k)
-    Seq.fill(2)(rnd.nextDouble()).flatMap { pick =>
+    Seq.fill(LookupRounds)(rnd.nextDouble()).flatMap { pick =>
       def d: Doc = {
         val accepted = pending.filter(_.fate == Valid)
         accepted((pick * accepted.size).toInt)
@@ -285,6 +286,10 @@ object IngestWorkload {
   val BatchDocs = 100
   val MaxChain = 3
   val MaxBatches = 240
+  /** Lookup rounds per batch: a lookup varies more within a run than a
+    * batch does, so each kind needs more samples for a steady median.
+    */
+  val LookupRounds = 3
   val InitialDatasets = 200
 
   private val Vocabulary: IndexedSeq[String] =

@@ -30,6 +30,10 @@ trait Workload {
   def counters(): Map[String, Any] = Map.empty
   /** Store directories the traced run's read probe times, by store name. */
   def stores: Map[String, String] = Map.empty
+  /** Whether the operations go through `Tables` and `GraftFunctions`, so
+    * the traced run probes those layers too.
+    */
+  def queryLayers: Boolean = false
   /** DuckDB oracle SQL of the workload's queries, for run.py to check. */
   def oracleSql: Map[String, String] = Map.empty
   def close(): Unit = ()
@@ -88,7 +92,10 @@ object Main {
 
     def runOp(op: Op, pass: Int): Rec = {
       op.prepare()
-      ctx.tracer.span(op.name, op.kind) { id =>
+      // the operation's span ends where its timing ends; the untimed check
+      // after it has a span and job group of its own, so a traced run
+      // does not count the check's Spark jobs as the operation's
+      val (res, sec) = ctx.tracer.span(op.name, op.kind) { id =>
         spark.sparkContext.setJobGroup(s"perfbench-$id", op.name, interruptOnCancel = false)
         val t0 = System.nanoTime()
         val res =
@@ -96,11 +103,15 @@ object Main {
           catch { case e: Throwable => Some(s"threw ${e.getClass.getSimpleName}: ${e.getMessage}") }
         val sec = (System.nanoTime() - t0) / 1e9
         spark.sparkContext.clearJobGroup()
-        val checked = res.orElse(
-          try op.verify()
-          catch { case e: Throwable => Some(s"verify threw ${e.getClass.getSimpleName}: ${e.getMessage}") })
-        Rec(pass, op.kind, op.name, sec, tracer.on, checked.map(_.take(400)))
+        (res, sec)
       }
+      val checked = res.orElse(ctx.tracer.span(op.name, "verify") { id =>
+        spark.sparkContext.setJobGroup(s"perfbench-$id", s"verify ${op.name}", interruptOnCancel = false)
+        try op.verify()
+        catch { case e: Throwable => Some(s"verify threw ${e.getClass.getSimpleName}: ${e.getMessage}") }
+        finally spark.sparkContext.clearJobGroup()
+      })
+      Rec(pass, op.kind, op.name, sec, tracer.on, checked.map(_.take(400)))
     }
 
     try {
@@ -119,33 +130,37 @@ object Main {
       // until the deadline and until every operation of a pass has been
       // measured. A group is a primary operation (query or batch) with the
       // lookups that follow it; a started group always finishes. A traced
-      // run makes two passes at least and traces each group in one of them
-      // (the first pass for every other group name, the second for the
-      // rest), so the same run also prices the tracing itself without
-      // favouring either side with the later, warmer pass.
+      // run traces every other run of each group name (the first run for
+      // every other name, the second for the rest) and ends once each name
+      // has run both ways, so the same run also prices the tracing itself
+      // without favouring either side with the later, warmer runs.
       val deadline = System.nanoTime() + (seconds * 1e9).toLong
       val unseen = mutable.Set(workload.ops(0).map(_.name): _*)
-      val tracedFirst = mutable.Map.empty[String, Boolean]
+      val heads = Main.groups(workload.ops(0)).map(_.head.name).distinct
+      val runs = mutable.Map(heads.map(_ -> 0): _*)
+      val ways = mutable.Set.empty[(String, Boolean)]
       var pass = 0
       var done = false
       while (!done) {
         val groups = Main.groups(workload.ops(pass)).iterator
         while (groups.hasNext && !done) {
           val group = groups.next()
-          val first = tracedFirst.getOrElseUpdate(group.head.name, tracedFirst.size % 2 == 1)
-          val traced = trace && first == (pass % 2 == 0)
+          val name = group.head.name
+          val traced = trace && (runs(name) + heads.indexOf(name)) % 2 == 1
+          runs(name) += 1
           if (traced) tracer.start()
           group.foreach(op => recs += runOp(op, pass))
           if (traced) tracer.stop()
+          ways += name -> traced
           unseen --= group.map(_.name)
-          done = !trace && unseen.isEmpty && System.nanoTime() >= deadline
+          done = System.nanoTime() >= deadline &&
+            (if (trace) ways.size == 2 * heads.size else unseen.isEmpty)
         }
         pass += 1
-        done = done || (trace && pass >= 2 && System.nanoTime() >= deadline)
       }
       if (trace) {
         tracer.start()
-        Probes.run(ctx, workload.stores)
+        Probes.run(ctx, workload.stores, workload.queryLayers)
         tracer.stop()
       }
       val counters = workload.counters() ++ Probes.memory(spark) ++

@@ -22,9 +22,11 @@ object Probes {
   /** Copies of the documents and embeddings tables in the kernel inputs. */
   private val Copies = 20
 
-  def run(ctx: Ctx, stores: Map[String, String]): Unit = {
-    tables(ctx)
-    kernels(ctx)
+  def run(ctx: Ctx, stores: Map[String, String], queryLayers: Boolean): Unit = {
+    if (queryLayers) {
+      tables(ctx)
+      kernels(ctx)
+    }
     stores.toSeq.sortBy(_._1).foreach { case (s, dir) => storeRead(ctx, s, dir) }
   }
 
