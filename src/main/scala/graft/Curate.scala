@@ -89,7 +89,7 @@ object Curate {
 
   def run(spark: SparkSession, sfDir: String, outDir: String, runTag: String): CurateReport = {
     // the stores' shared tag grammar — one rule, not a third copy
-    graft.sources.FreqStore.requireValidTag(runTag)
+    graft.sources.Ledger.requireValidTag(runTag)
     val f = fs(spark, outDir)
     val markerPath = new Path(outDir, Marker)
     if (f.exists(markerPath)) {

@@ -4,16 +4,13 @@ import org.apache.hadoop.fs.{FileContext, FileSystem, FileUtil, Path}
 import org.apache.spark.sql.SparkSession
 
 /** The ONE compare-and-swap publish protocol every versioned lake
-  * artifact shares (CatalogStore snapshots, DedupIndex / FreqStore /
-  * IvfIndex LSM versions): claim `v=N` atomically, and clear crash debris
-  * only through the explicit quiesced-writers repair op. Extracted in r13
-  * so the claim semantics — including the TOCTOU fix that removed the
-  * inline orphan-delete — have exactly one implementation to keep correct
-  * (four byte-identical copies previously had to be kept in sync by hand).
-  *
-  * Store-specific knowledge stays in the stores: what a marker contains
-  * (each store's `Meta`) is injected as the `committed` predicate; this
-  * object owns only the claim/lose/repair mechanics.
+  * artifact shares: claim `v=N` atomically, and clear crash debris only
+  * through the explicit quiesced-writers repair op, so the claim
+  * semantics — including the TOCTOU fix that removed the inline
+  * orphan-delete — have exactly one implementation to keep correct.
+  * Stores reach it through [[Ledger]], which supplies the `committed`
+  * predicate (an uncached re-read of the store's marker); this object
+  * owns only the claim/lose/repair mechanics.
   *
   * HOW the slot is claimed is a per-filesystem [[VersionCommitter]] seam
   * (r15) — the publish CONTRACT is identical under both committers, only

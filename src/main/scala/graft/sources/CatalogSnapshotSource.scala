@@ -52,6 +52,14 @@ object CatalogSnapshotSource {
     */
   private val schemaCache =
     new java.util.concurrent.ConcurrentHashMap[(String, Long), StructType]()
+
+  /** Forget `dir`'s schemas — the catalog's [[Ledger]] calls this whenever
+    * it drops the dir's markers (init, repair, gc): a catalog deleted and
+    * re-initialized at the same path may reuse a version number with a
+    * different key type (`dataset_key` is untyped).
+    */
+  private[sources] def dropSchemas(dir: String): Unit =
+    schemaCache.keySet.removeIf(_._1 == dir)
 }
 
 class CatalogSnapshotSource extends TableProvider {
@@ -73,7 +81,7 @@ class CatalogSnapshotSource extends TableProvider {
     // METADATA, the same class as Spark's own file-index caching; the
     // DATA is still read and integrity-verified on every execution).
     CatalogSnapshotSource.schemaCache.computeIfAbsent((dir, v), { _ =>
-      val full = SparkSession.active.read.parquet(CatalogStore.snapshotPath(dir, v)).schema
+      val full = SparkSession.active.read.parquet(CatalogStore.ledger.versionPath(dir, v)).schema
       StructType(full.fields.filterNot(_.name == "shard"))
     })
   }

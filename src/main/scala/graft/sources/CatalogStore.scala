@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -59,35 +59,28 @@ object CatalogStore {
   val TitlePattern: String = "^[āēīōūĀĒĪŌŪA-Za-z0-9_-]+$"
 
   private val Shards = 16
-  private val Marker = "_COMMITTED"
+  private val ManifestRe = """\{"rows":(-?\d+),"xor":(-?\d+)\}""".r
 
-  private def fs(spark: SparkSession, dir: String): FileSystem =
-    new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private[sources] def snapshotPath(dir: String, version: Long) = s"$dir/v=$version"
-
-  private def isCommitted(f: FileSystem, dir: String, version: Long): Boolean =
-    f.exists(new Path(snapshotPath(dir, version), Marker))
+  /** Every snapshot is a complete catalog (a base), so the read chain is
+    * the published version alone. Its marker is the snapshot manifest.
+    */
+  private[sources] val ledger = new Ledger[(Long, Long)](
+    "catalog", "batch",
+    { case (rows, x) => s"""{"rows":$rows,"xor":$x}""" },
+    { case ManifestRe(rows, x) => Some((rows.toLong, x.toLong)); case _ => None },
+    _ => true,
+    CatalogSnapshotSource.dropSchemas)
 
   /** Committed snapshot versions, ascending. Only the atomic publish
-    * rename creates a `_COMMITTED` marker, so presence IS publication; a
+    * creates a `_COMMITTED` marker, so presence IS publication; a
     * marker-less `v=N` dir (pre-CAS crash debris, manual garbage) is not
     * data and is invisible here.
     */
-  def listVersions(spark: SparkSession, dir: String): Seq[Long] = {
-    val f = fs(spark, dir)
-    if (!f.exists(new Path(dir))) return Seq.empty
-    f.listStatus(new Path(dir)).toSeq
-      .filter(_.isDirectory)
-      .map(_.getPath.getName)
-      .collect { case s if s.startsWith("v=") => s.stripPrefix("v=").toLong }
-      .filter(v => isCommitted(f, dir, v))
-      .sorted
-  }
+  def listVersions(spark: SparkSession, dir: String): Seq[Long] = ledger.listVersions(spark, dir)
 
   /** The published version, if any: the newest committed snapshot. */
   def currentVersion(spark: SparkSession, dir: String): Option[Long] =
-    listVersions(spark, dir).lastOption
+    ledger.currentVersion(spark, dir)
 
   /** Snapshot manifest: row count + order-independent content hash
     * (bit_xor of per-row xxhash64 — commutative, so shard/task order
@@ -105,14 +98,6 @@ object CatalogStore {
     (r.getLong(0), r.getLong(1))
   }
 
-  private def parseManifest(s: String): Option[(Long, Long)] = {
-    val m = """\{"rows":(-?\d+),"xor":(-?\d+)\}""".r
-    s.trim match {
-      case m(rows, x) => Some((rows.toLong, x.toLong))
-      case _          => None
-    }
-  }
-
   /** Write the snapshot into a private staging dir and drop the commit
     * marker — carrying the snapshot manifest, computed by reading BACK
     * the staged files (so the manifest certifies what landed on disk, not
@@ -121,54 +106,30 @@ object CatalogStore {
     */
   private[graft] def stage(df: DataFrame, dir: String, version: Long): Path = {
     val spark = df.sparkSession
-    val staging = new Path(dir, s"_staging/v$version-${java.util.UUID.randomUUID()}")
-    df.select(
-        col("dataset_key"),
-        col("title"),
-        col("revision"),
-        pmod(hash(col("dataset_key")), lit(Shards)).as("shard"))
-      .write
-      .partitionBy("shard")
-      .mode("overwrite")
-      .parquet(staging.toString)
-    val (rows, x) = manifestOf(
-      spark.read.parquet(staging.toString).select("dataset_key", "title", "revision"))
-    val f = spark.sparkContext.hadoopConfiguration
-    val out = staging.getFileSystem(f).create(new Path(staging, Marker), false)
-    try out.write(s"""{"rows":$rows,"xor":$x}""".getBytes("UTF-8"))
-    finally out.close()
-    staging
+    ledger.stage(spark, dir, version) { staging =>
+      df.select(
+          col("dataset_key"),
+          col("title"),
+          col("revision"),
+          pmod(hash(col("dataset_key")), lit(Shards)).as("shard"))
+        .write
+        .partitionBy("shard")
+        .mode("overwrite")
+        .parquet(staging.toString)
+      manifestOf(
+        spark.read.parquet(staging.toString).select("dataset_key", "title", "revision"))
+    }
   }
 
-  /** In-JVM claim serialization: the Spark driver is the commit
-    * coordinator (as in Delta's local log protocol), so two writer threads
-    * in one driver serialize here and the existence check below is
-    * race-free. Cross-process safety is the [[VersionCommitter]] seam's
-    * CONTRACT, selected per filesystem scheme: atomic no-overwrite rename
-    * where the filesystem has one (HDFS: atomic in the NameNode), a
-    * conditional-put claim on object stores whose copy-emulated rename
-    * would let two racers both "succeed" (CasProtocolSpec proves both
-    * directions against a non-atomic FS shim). RawLocalFileSystem alone
-    * would NOT suffice cross-thread — its rename can fall back to a copy
-    * INTO an existing destination dir — which is exactly what this lock
-    * forecloses.
+  /** The CAS publish: claim `v=N` with the staged snapshot. Exactly one
+    * claimant of a version succeeds; the loser throws loudly with its
+    * batch unpublished (re-read and retry is the caller's move). A
+    * marker-less `v=N` dir occupying the slot blocks the claim (it may be
+    * a publish in flight from another JVM) — clearing it is the explicit
+    * repair() op, never this path.
     */
-  private val commitLock = new Object
-
-  /** The CAS publish: claim `v=N` by renaming the staged snapshot onto it
-    * with NO overwrite. Exactly one claimant of a version succeeds; the
-    * loser throws loudly with its batch unpublished (re-read and retry is
-    * the caller's move). A marker-less `v=N` dir occupying the slot blocks
-    * the claim (it may be a rename in flight from another JVM) — clearing
-    * it is the explicit repair() op, never this path.
-    */
-  // CAS claim delegates to the shared [[CasProtocol]] — one
-  // implementation of the no-overwrite claim and its TOCTOU-safe failure
-  // handling for all four versioned stores
   private[graft] def commit(spark: SparkSession, dir: String, staging: Path, version: Long): Unit =
-    CasProtocol.claim(
-      spark, dir, staging, new Path(snapshotPath(dir, version)), version, commitLock,
-      () => isCommitted(fs(spark, dir), dir, version), "batch")
+    ledger.commit(spark, dir, staging, version)
 
   /** Explicit crash-debris cleanup: deletes marker-less `v=N` dirs (a
     * crashed writer's partial claim) and everything under `_staging`.
@@ -176,24 +137,20 @@ object CatalogStore {
     * indistinguishable from a rename in flight. Never touches committed
     * versions. Returns the deleted paths.
     */
-  def repair(spark: SparkSession, dir: String): Seq[String] =
-    CasProtocol.repair(spark, dir, v => isCommitted(fs(spark, dir), dir, v))
+  def repair(spark: SparkSession, dir: String): Seq[String] = ledger.repair(spark, dir)
 
   /** Create the store with an initial catalog of (dataset_key, title,
     * revision) rows. Fails if already initialized.
     */
   def init(spark: SparkSession, dir: String, initial: DataFrame): Long = {
-    require(currentVersion(spark, dir).isEmpty, s"catalog at $dir already initialized")
+    ledger.requireEmpty(spark, dir)
     commit(spark, dir, stage(initial, dir, 1L), 1L)
     1L
   }
 
   /** The published snapshot (shard column dropped — storage detail). */
-  def read(spark: SparkSession, dir: String): DataFrame = {
-    val v = currentVersion(spark, dir)
-      .getOrElse(throw new IllegalStateException(s"no published catalog at $dir"))
-    readVersion(spark, dir, v)
-  }
+  def read(spark: SparkSession, dir: String): DataFrame =
+    readVersion(spark, dir, ledger.latest(spark, dir))
 
   /** Time travel: read a specific PUBLISHED snapshot. Published versions
     * are immutable, so any one GC hasn't reclaimed is a consistent
@@ -212,24 +169,14 @@ object CatalogStore {
     * shared front half of both verified-read paths.
     */
   private def markerManifest(spark: SparkSession, dir: String, version: Long): (Long, Long) = {
-    val f = fs(spark, dir)
-    require(isCommitted(f, dir, version), s"v=$version was never published at $dir")
-    val markerPath = new Path(snapshotPath(dir, version), Marker)
-    val markerBody = {
-      val buf = new Array[Byte](f.getFileStatus(markerPath).getLen.toInt)
-      val in = f.open(markerPath)
-      try in.readFully(0, buf)
-      finally in.close()
-      new String(buf, "UTF-8")
-    }
-    parseManifest(markerBody).getOrElse(
-      throw new IllegalStateException(
-        s"v=$version at $dir: unreadable snapshot manifest in $Marker — refusing to serve"))
+    val m = ledger.readMetaUncached(spark, dir, version)
+    require(m.isDefined, s"v=$version was never published at $dir")
+    m.get
   }
 
   def readVersion(spark: SparkSession, dir: String, version: Long): DataFrame = {
     val (wantRows, wantXor) = markerManifest(spark, dir, version)
-    val df = spark.read.parquet(snapshotPath(dir, version)).select("dataset_key", "title", "revision")
+    val df = spark.read.parquet(ledger.versionPath(dir, version)).select("dataset_key", "title", "revision")
     val (gotRows, gotXor) = manifestOf(df)
     if (gotRows != wantRows || gotXor != wantXor)
       throw new IllegalStateException(
@@ -255,7 +202,7 @@ object CatalogStore {
       spark: SparkSession, dir: String, version: Long,
       maxRows: Int, what: String,
       knownSchema: Option[org.apache.spark.sql.types.StructType] = None)
-      : (Array[org.apache.spark.sql.Row], org.apache.spark.sql.types.StructType) = {
+      : (Array[Row], org.apache.spark.sql.types.StructType) = {
     val (wantRows, wantXor) = markerManifest(spark, dir, version)
     // the metadata-scale bound is checked against the MANIFEST before
     // anything is collected (the published row count is part of the
@@ -272,8 +219,16 @@ object CatalogStore {
     val reader = knownSchema.fold(spark.read)(s => spark.read.schema(
       org.apache.spark.sql.types.StructType(s.fields :+
         org.apache.spark.sql.types.StructField("shard", org.apache.spark.sql.types.IntegerType))))
-    val df = reader.parquet(snapshotPath(dir, version)).select("dataset_key", "title", "revision")
-    val rows = df.collect()
+    val df = reader.parquet(ledger.versionPath(dir, version)).select("dataset_key", "title", "revision")
+    // ONE job with a global bound: each task ships at most wantRows + 1
+    // rows and the driver keeps no more than that in total, so a snapshot
+    // holding more rows than its manifest (a duplicated part file) fails
+    // the count check below without its surplus reaching the driver
+    val cap = wantRows.toInt + 1
+    val kept = scala.collection.mutable.ArrayBuffer.empty[Row]
+    spark.sparkContext.runJob(df.rdd, (it: Iterator[Row]) => it.take(cap).toArray,
+      (_: Int, part: Array[Row]) => kept ++= part.take(cap - kept.length))
+    val rows = kept.toArray
     val schema = df.schema
     val hashExpr = new org.apache.spark.sql.catalyst.expressions.XxHash64(
       schema.fields.zipWithIndex.map { case (fd, i) =>
@@ -290,7 +245,8 @@ object CatalogStore {
     if (rows.length.toLong != wantRows || gotXor != wantXor)
       throw new IllegalStateException(
         s"v=$version at $dir is CORRUPT: manifest says rows=$wantRows xor=$wantXor, " +
-          s"snapshot reads rows=${rows.length} xor=$gotXor — refusing to serve")
+          s"snapshot reads rows=${rows.length}${if (rows.length == cap) "+" else ""} " +
+          s"xor=$gotXor — refusing to serve")
     (rows, schema)
   }
 
@@ -384,8 +340,7 @@ object CatalogStore {
     * current).
     */
   def upsert(spark: SparkSession, dir: String, changes: DataFrame): UpsertStats = {
-    val current = currentVersion(spark, dir)
-      .getOrElse(throw new IllegalStateException(s"no published catalog at $dir"))
+    val current = ledger.latest(spark, dir)
     val m = merged(readVersion(spark, dir, current), changes).localCheckpoint()
     val counts = m.groupBy(col("action")).count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -411,15 +366,14 @@ object CatalogStore {
     * reference's 404).
     */
   def get(spark: SparkSession, dir: String, key: Any): Option[(String, Long)] = {
-    val current = currentVersion(spark, dir)
-      .getOrElse(throw new IllegalStateException(s"no published catalog at $dir"))
+    val current = ledger.latest(spark, dir)
     // seed 42 = the default of SQL hash(), which stage()'s pmod(hash(key))
     // partitioned by
     val h = org.apache.spark.sql.catalyst.expressions
       .Murmur3Hash(Seq(org.apache.spark.sql.catalyst.expressions.Literal(key)), 42)
       .eval(null).asInstanceOf[Int]
     val shard = ((h % Shards) + Shards) % Shards
-    spark.read.parquet(snapshotPath(dir, current))
+    spark.read.parquet(ledger.versionPath(dir, current))
       .filter(col("shard") === shard && col("dataset_key") === lit(key))
       .select(col("title"), col("revision").cast("long"))
       .collect() // ≤1 row: snapshots are unique per key
@@ -483,8 +437,7 @@ object CatalogStore {
         s"${r.getAs[String]("violation")}: ${r.getAs[Long]("n")} key(s), e.g. '${r.getAs[String]("example")}'")
       throw new IllegalArgumentException(s"delete rejected at $dir — ${detail.mkString("; ")}")
     }
-    val current = currentVersion(spark, dir)
-      .getOrElse(throw new IllegalStateException(s"no published catalog at $dir"))
+    val current = ledger.latest(spark, dir)
     val k = keys.select(col("dataset_key")).distinct()
     val nDoomed = k.count()
     if (nDoomed == 0) return DeleteStats(current, 0L)
@@ -497,7 +450,7 @@ object CatalogStore {
   final case class CompactStats(version: Long, filesBefore: Long, filesAfter: Long, rows: Long)
 
   private def dataFileCount(f: FileSystem, dir: String, version: Long): Long = {
-    val it = f.listFiles(new Path(snapshotPath(dir, version)), true)
+    val it = f.listFiles(new Path(ledger.versionPath(dir, version)), true)
     var n = 0L
     while (it.hasNext) {
       val s = it.next()
@@ -523,9 +476,8 @@ object CatalogStore {
     * the snapshot is already at ≤ one file per shard.
     */
   def compact(spark: SparkSession, dir: String): CompactStats = {
-    val current = currentVersion(spark, dir)
-      .getOrElse(throw new IllegalStateException(s"no published catalog at $dir"))
-    val f = fs(spark, dir)
+    val current = ledger.latest(spark, dir)
+    val f = ledger.fs(spark, dir)
     val before = dataFileCount(f, dir, current)
     val df = readVersion(spark, dir, current) // manifest-verified source
     val (srcRows, srcXor) = manifestOf(df)
@@ -539,24 +491,10 @@ object CatalogStore {
     // 16 distinct values two shards can coalesce into one partition and
     // the one-file-per-shard co-location silently degrades.
     val clustered = df.repartition(Shards, col("dataset_key"))
-    val staging = stage(clustered, dir, next)
     // the staged manifest certifies what landed on disk; equality with the
     // source manifest proves the rewrite moved every row and nothing else
-    val markerBody = {
-      val in = f.open(new Path(staging, Marker))
-      try new String(
-        Iterator.continually(in.read()).takeWhile(_ != -1).map(_.toByte).toArray, "UTF-8")
-      finally in.close()
-    }
-    val (gotRows, gotXor) = parseManifest(markerBody).getOrElse(
-      throw new IllegalStateException(s"compaction staged an unreadable manifest at $staging"))
-    if (gotRows != srcRows || gotXor != srcXor) {
-      f.delete(staging, true)
-      throw new IllegalStateException(
-        s"compaction of v=$current would CHANGE content (rows $srcRows→$gotRows, " +
-          s"xor $srcXor→$gotXor) — aborted, nothing published")
-    }
-    commit(spark, dir, staging, next)
+    ledger.commitIfUnchanged(spark, dir, stage(clustered, dir, next), next, (srcRows, srcXor))(
+      identity)
     CompactStats(next, before, dataFileCount(f, dir, next), srcRows)
   }
 
@@ -569,11 +507,9 @@ object CatalogStore {
     */
   def gcVersions(spark: SparkSession, dir: String, keep: Int): Seq[Long] = {
     require(keep >= 1, "must keep at least one version")
-    val f = fs(spark, dir)
-    val current = currentVersion(spark, dir).getOrElse(return Seq.empty)
-    val doomed = listVersions(spark, dir).reverse.drop(keep).filter(_ != current)
-    doomed.foreach(v => f.delete(new Path(snapshotPath(dir, v)), true))
-    f.delete(new Path(dir, "_staging"), true)
+    if (currentVersion(spark, dir).isEmpty) return Seq.empty
+    val doomed = ledger.gc(spark, dir, keep - 1)
+    ledger.fs(spark, dir).delete(new Path(dir, "_staging"), true)
     doomed
   }
 }

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -178,29 +178,6 @@ object FreqStore {
       newTokens: Long, newVocab: Long, newDocs: Long,
       totalTokens: Long, totalDocs: Long)
 
-  private val Marker = "_COMMITTED"
-  // Committed markers are IMMUTABLE (versions are never rewritten, only
-  // created or deleted whole, and no code path queries a deleted version
-  // — every consumer iterates a fresh directory listing first), so
-  // successful marker reads memoize forever. Without this, every
-  // append/read re-fetches O(chain) marker files per operation — real
-  // round-trips on an object store.
-  // SCOPE OF THE ASSUMPTION (read APIs inherit it): the cache is per-JVM
-  // and invalidated only by THIS JVM's init/gc/repair — if another
-  // process deletes and re-initializes the store at the same path, reads
-  // here can serve the previous incarnation's Meta for reused version
-  // numbers. That is the documented single-writer / no-out-of-band-
-  // deletion contract; the COMMIT predicate always re-reads uncached, so
-  // publishes are safe regardless. A caller that must observe a foreign
-  // re-init should route it through this JVM's init/repair.
-  private val metaCache = new java.util.concurrent.ConcurrentHashMap[String, Meta]()
-  private val commitLock = new Object
-
-  private def fs(spark: SparkSession, dir: String): FileSystem =
-    new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def versionPath(dir: String, v: Long) = s"$dir/v=$v"
-
   private final case class Meta(
       kind: String, family: String, nt: Long, nv: Long, nd: Long, tag: Option[String])
 
@@ -219,73 +196,28 @@ object FreqStore {
       """(?:,"tag":"([^"]*)")?\}""").r
   private val NdUnknown = -1L
 
-  // drop every cached marker under `dir` — init/gc/repair call this so a
-  // deleted-and-recreated store (or reclaimed versions) can never be
-  // served from a previous incarnation's metadata
-  private def invalidateMetaCache(dir: String): Unit =
-    metaCache.keySet.removeIf(_.startsWith(s"$dir|"))
-
-  private def readMeta(f: FileSystem, dir: String, v: Long): Option[Meta] = {
-    val cached = metaCache.get(s"$dir|$v")
-    if (cached != null) return Some(cached)
-    val out = readMetaUncached(f, dir, v)
-    out.foreach(m => metaCache.put(s"$dir|$v", m))
-    out
-  }
-
-  private def readMetaUncached(f: FileSystem, dir: String, v: Long): Option[Meta] = {
-    val p = new Path(versionPath(dir, v), Marker)
-    if (!f.exists(p)) return None
-    val in = f.open(p)
-    val body =
-      try new String(
-        Iterator.continually(in.read()).takeWhile(_ != -1).map(_.toByte).toArray, "UTF-8")
-      finally in.close()
-    body.trim match {
+  private val ledger = new Ledger[Meta](
+    "count store", "count update",
+    m => s"""{"kind":"${m.kind}","family":"${m.family}","nt":${m.nt},"nv":${m.nv},""" +
+      s""""nd":${m.nd}${Ledger.tagField(m.tag)}}""",
+    {
       case MetaRe(kind, fam, nt, nv, nd, tag) =>
         Some(Meta(kind, fam, nt.toLong, nv.toLong, nd.toLong, Option(tag)))
       case LegacyMetaRe(kind, nt, nv, tag) =>
         Some(Meta(kind, "unigram", nt.toLong, nv.toLong, NdUnknown, Option(tag)))
-      case _ =>
-        // present-but-unparseable is CORRUPTION OR MIGRATION, never
-        // absence: treating it as uncommitted hides the version from
-        // listVersions and turns repair() into a committed-data reaper
-        throw new IllegalStateException(
-          s"committed marker at $p is unreadable — store format migrated or marker " +
-            "corrupt; refusing to treat the version as uncommitted (repair would reap " +
-            "committed data). Restore the marker or rebuild the store at a fresh path.")
-    }
-  }
+      case _ => None
+    },
+    _.kind == "base")
 
   /** Committed versions ascending — marker presence IS publication. */
-  def listVersions(spark: SparkSession, dir: String): Seq[Long] = {
-    val f = fs(spark, dir)
-    if (!f.exists(new Path(dir))) return Seq.empty
-    f.listStatus(new Path(dir)).toSeq
-      .filter(_.isDirectory)
-      .map(_.getPath.getName)
-      .collect { case s if s.startsWith("v=") => s.stripPrefix("v=").toLong }
-      .filter(v => readMeta(f, dir, v).isDefined)
-      .sorted
-  }
+  def listVersions(spark: SparkSession, dir: String): Seq[Long] = ledger.listVersions(spark, dir)
 
   def currentVersion(spark: SparkSession, dir: String): Option[Long] =
-    listVersions(spark, dir).lastOption
+    ledger.currentVersion(spark, dir)
 
   /** The family this store was built at (pinned at init). */
-  def storeFamily(spark: SparkSession, dir: String): Family = {
-    val f = fs(spark, dir)
-    familyOf(readMeta(f, dir, listVersions(spark, dir).headOption.getOrElse(
-      throw new IllegalStateException(s"no count store at $dir"))).get.family)
-  }
-
-  private def readChain(spark: SparkSession, dir: String): Seq[Long] = {
-    val f = fs(spark, dir)
-    val vs = listVersions(spark, dir)
-    require(vs.nonEmpty, s"no count store at $dir")
-    val lastBase = vs.filter(v => readMeta(f, dir, v).get.kind == "base").lastOption
-    vs.filter(v => lastBase.forall(v >= _))
-  }
+  def storeFamily(spark: SparkSession, dir: String): Family =
+    familyOf(ledger.pinned(spark, dir).family)
 
   /** The current merged count view (columns = family keys + `n`) — the
     * base+delta chain count-merged. One vocab-scale aggregate over at
@@ -308,9 +240,7 @@ object FreqStore {
     * [[counts]].
     */
   def rawCounts(spark: SparkSession, dir: String): DataFrame =
-    readChain(spark, dir)
-      .map(v => spark.read.parquet(s"${versionPath(dir, v)}/freq"))
-      .reduce(_.unionByName(_))
+    ledger.readUnion(spark, dir, "freq")
 
   /** The unigram view (`token`, `n`) — fails loudly on a non-unigram
     * store instead of serving a foreign count family.
@@ -326,8 +256,7 @@ object FreqStore {
     * `nd`) — exact under the ingest-once contract; q146's n_train.
     */
   def totalDocs(spark: SparkSession, dir: String): Long = {
-    val f = fs(spark, dir)
-    val nds = readChain(spark, dir).map(v => readMeta(f, dir, v).get.nd)
+    val nds = ledger.readChain(spark, dir).map(ledger.meta(spark, dir, _).nd)
     require(nds.forall(_ != NdUnknown),
       s"count store at $dir has legacy (pre-family) markers with no doc counts — " +
         "totalDocs would be wrong; rebuild the store at a fresh path")
@@ -342,92 +271,39 @@ object FreqStore {
   // here would add one directory-LIST round-trip per mutation on an
   // object store just to re-derive what the caller fetched (the meta
   // reads themselves are memoized, so they cost nothing)
-  private def requireModern(spark: SparkSession, dir: String, vs: Seq[Long]): Unit = {
-    val f = fs(spark, dir)
+  private def requireModern(spark: SparkSession, dir: String, vs: Seq[Long]): Unit =
     require(
-      vs.forall(v => readMeta(f, dir, v).get.nd != NdUnknown),
+      vs.forall(v => ledger.meta(spark, dir, v).nd != NdUnknown),
       s"count store at $dir has legacy (pre-family) markers — read-only; " +
         "rebuild the store at a fresh path to mutate it")
-  }
-
-  // the tag lands verbatim in the marker JSON: restrict it to a
-  // quote/backslash-free charset or the committed marker would be
-  // unparseable — the version would vanish from listVersions and
-  // repair() would reap committed data as debris
-  private[graft] def requireValidTag(tg: String): Unit =
-    require(tg.nonEmpty && tg.length <= 128 && tg.forall(c =>
-      (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z') ||
-        (c >= '0' && c <= '9') || "._:-".contains(c)),
-      s"append tag must be 1..128 chars of [A-Za-z0-9._:-]: '$tg'")
 
   /** Whether any committed version carries `tg` — the batch-replay
     * idempotence probe shared by [[append]] and
     * [[appendWinSrcProjection]] (a marker scan; metas are memoized).
     */
-  private def tagApplied(spark: SparkSession, dir: String, tg: String): Boolean = {
-    val f = fs(spark, dir)
-    listVersions(spark, dir).exists(v => readMeta(f, dir, v).get.tag.contains(tg))
-  }
+  private def tagApplied(spark: SparkSession, dir: String, tg: String): Boolean =
+    listVersions(spark, dir).exists(v => ledger.meta(spark, dir, v).tag.contains(tg))
 
   private def stage(
       spark: SparkSession, dir: String, v: Long, kind: String, fam: Family,
-      freq: DataFrame, nd: Long, tag: Option[String] = None): Path = {
-    val staging = new Path(dir, s"_staging/v$v-${java.util.UUID.randomUUID()}")
-    freq.write.mode("overwrite").parquet(s"$staging/freq")
-    // manifest read BACK from the staged files — certifying what landed
-    val staged = spark.read.parquet(s"$staging/freq")
-    val row = staged.agg(
-      coalesce(sum(col("n")), lit(0L)).as("nt"), count(lit(1)).as("nv")).head()
-    val (nt, nv) = (row.getLong(0), row.getLong(1))
-    val out = fs(spark, dir).create(new Path(staging, Marker), false)
-    val tagField = tag.map(t => s""","tag":"$t"""").getOrElse("")
-    try out.write(
-      s"""{"kind":"$kind","family":"${fam.name}","nt":$nt,"nv":$nv,"nd":$nd$tagField}"""
-        .getBytes("UTF-8"))
-    finally out.close()
-    staging
-  }
-
-  private def stagedMeta(spark: SparkSession, dir: String, staging: Path): Meta = {
-    val in = fs(spark, dir).open(new Path(staging, Marker))
-    val body =
-      try new String(
-        Iterator.continually(in.read()).takeWhile(_ != -1).map(_.toByte).toArray, "UTF-8")
-      finally in.close()
-    body.trim match {
-      case MetaRe(kind, fam, nt, nv, nd, tag) =>
-        Meta(kind, fam, nt.toLong, nv.toLong, nd.toLong, Option(tag))
-      case other => throw new IllegalStateException(s"unreadable staged marker: $other")
+      freq: DataFrame, nd: Long, tag: Option[String] = None): Path =
+    ledger.stage(spark, dir, v) { staging =>
+      freq.write.mode("overwrite").parquet(s"$staging/freq")
+      // manifest read BACK from the staged files — certifying what landed
+      val row = spark.read.parquet(s"$staging/freq").agg(
+        coalesce(sum(col("n")), lit(0L)).as("nt"), count(lit(1)).as("nv")).head()
+      Meta(kind, fam.name, row.getLong(0), row.getLong(1), nd, tag)
     }
-  }
-
-  // CAS claim + debris repair: the shared protocol ([[CasProtocol]] —
-  // one implementation of the no-overwrite claim and its TOCTOU-safe
-  // failure handling for all four versioned stores)
-  private def commit(spark: SparkSession, dir: String, staging: Path, v: Long): Unit =
-    CasProtocol.claim(
-      spark, dir, staging, new Path(versionPath(dir, v)), v, commitLock,
-      // the claim predicate must RE-READ the marker (CasProtocol's
-      // contract) — the memoized readMeta would serve a stale positive
-      // after an out-of-band store deletion at the same path
-      () => readMetaUncached(fs(spark, dir), dir, v).isDefined, "count update")
 
   /** Quiesced-writers crash-debris cleanup — [[CasProtocol.repair]]. */
-  def repair(spark: SparkSession, dir: String): Seq[String] = {
-    invalidateMetaCache(dir)
-    CasProtocol.repair(spark, dir, v => readMetaUncached(fs(spark, dir), dir, v).isDefined)
-  }
+  def repair(spark: SparkSession, dir: String): Seq[String] = ledger.repair(spark, dir)
 
   private def stats(spark: SparkSession, dir: String, v: Long): FreqStats = {
-    val f = fs(spark, dir)
-    val m = readMeta(f, dir, v).get
-    val chain = readChain(spark, dir)
-    val totalN = chain.map(cv => readMeta(f, dir, cv).get.nt).sum
-    val totalD = chain.map(cv => readMeta(f, dir, cv).get.nd).sum
-    FreqStats(v, m.kind, m.family, m.nt, m.nv, m.nd, totalN, totalD)
+    val m = ledger.meta(spark, dir, v)
+    val chain = ledger.readChain(spark, dir).map(ledger.meta(spark, dir, _))
+    FreqStats(v, m.kind, m.family, m.nt, m.nv, m.nd, chain.map(_.nt).sum, chain.map(_.nd).sum)
   }
 
-  /** Build v=1 (a base) from the curated corpus. Fails if initialized. */
   // one corpus pass per publish: the family's occurrence relation is
   // persisted so the count table and the nd doc count both read it
   private def stageOnePass(
@@ -441,13 +317,13 @@ object FreqStore {
     } finally pos.unpersist()
   }
 
+  /** Build v=1 (a base) from the curated corpus. Fails if initialized. */
   def init(
       spark: SparkSession, dir: String, docs: DataFrame,
       family: Family = Unigram): FreqStats = {
-    invalidateMetaCache(dir)
-    require(currentVersion(spark, dir).isEmpty, s"count store at $dir already initialized")
+    ledger.requireEmpty(spark, dir)
     val (staging, _) = stageOnePass(spark, dir, 1L, "base", family, docs, None)
-    commit(spark, dir, staging, 1L)
+    ledger.commit(spark, dir, staging, 1L)
     stats(spark, dir, 1L)
   }
 
@@ -466,8 +342,7 @@ object FreqStore {
   def initWinSrcProjection(
       spark: SparkSession, dir: String, windocDir: String,
       docFilter: DataFrame => DataFrame = identity): FreqStats = {
-    invalidateMetaCache(dir)
-    require(currentVersion(spark, dir).isEmpty, s"count store at $dir already initialized")
+    ledger.requireEmpty(spark, dir)
     val k = storeFamily(spark, windocDir) match {
       case WindowDoc(wk) => wk
       case other => throw new IllegalArgumentException(
@@ -479,7 +354,7 @@ object FreqStore {
       val nd = rel.agg(countDistinct(col("doc_id"))).head().getLong(0)
       val proj = rel.groupBy(col("wh"), col("source")).agg(count(lit(1)).as("n"))
       val staging = stage(spark, dir, 1L, "base", WindowSrc(k), proj, nd)
-      commit(spark, dir, staging, 1L)
+      ledger.commit(spark, dir, staging, 1L)
       stats(spark, dir, 1L)
     } finally rel.unpersist()
   }
@@ -507,7 +382,7 @@ object FreqStore {
   def appendWinSrcProjection(
       spark: SparkSession, dir: String, windocDir: String, tag: String,
       docFilter: DataFrame => DataFrame = identity): FreqStats = {
-    requireValidTag(tag)
+    Ledger.requireValidTag(tag)
     val allVs = listVersions(spark, dir)
     val cur = allVs.lastOption.getOrElse(
       throw new IllegalStateException(s"no count store at $dir — init first"))
@@ -524,12 +399,11 @@ object FreqStore {
         s"projection source at $windocDir holds family '${other.name}', not windoc")
     }
     if (tagApplied(spark, dir, tag)) return stats(spark, dir, cur)
-    val fSrc = fs(spark, windocDir)
     listVersions(spark, windocDir)
-      .find(v => readMeta(fSrc, windocDir, v).get.tag.contains(tag)) match {
+      .find(v => ledger.meta(spark, windocDir, v).tag.contains(tag)) match {
       case None => stats(spark, dir, cur)
       case Some(srcV) =>
-        val delta = docFilter(spark.read.parquet(s"${versionPath(windocDir, srcV)}/freq"))
+        val delta = docFilter(spark.read.parquet(s"${ledger.versionPath(windocDir, srcV)}/freq"))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
           val nd = delta.agg(countDistinct(col("doc_id"))).head().getLong(0)
@@ -538,13 +412,7 @@ object FreqStore {
           // as the init-time projection
           val proj = delta.groupBy(col("wh"), col("source")).agg(count(lit(1)).as("n"))
           val staging = stage(spark, dir, cur + 1, "delta", WindowSrc(k), proj, nd, Some(tag))
-          if (stagedMeta(spark, dir, staging).nt == 0L) {
-            fs(spark, dir).delete(staging, true)
-            stats(spark, dir, cur)
-          } else {
-            commit(spark, dir, staging, cur + 1)
-            stats(spark, dir, cur + 1)
-          }
+          stats(spark, dir, ledger.commitUnlessEmpty(spark, dir, staging, cur + 1)(_.nt == 0L))
         } finally delta.unpersist()
     }
   }
@@ -567,18 +435,12 @@ object FreqStore {
     // an already-committed tag means this exact batch's counts are
     // already in the chain, so the replay is a no-op.
     tag.foreach { tg =>
-      requireValidTag(tg)
+      Ledger.requireValidTag(tg)
       if (tagApplied(spark, dir, tg)) return stats(spark, dir, cur)
     }
     val fam = storeFamily(spark, dir)
     val (staging, _) = stageOnePass(spark, dir, cur + 1, "delta", fam, batch, tag)
-    if (stagedMeta(spark, dir, staging).nt == 0L) {
-      fs(spark, dir).delete(staging, true) // nothing new: no version
-      stats(spark, dir, cur)
-    } else {
-      commit(spark, dir, staging, cur + 1)
-      stats(spark, dir, cur + 1)
-    }
+    stats(spark, dir, ledger.commitUnlessEmpty(spark, dir, staging, cur + 1)(_.nt == 0L))
   }
 
   /** Maintenance policy: fold the chain once it exceeds `maxChain`
@@ -594,7 +456,7 @@ object FreqStore {
     val cur = allVs.lastOption.getOrElse(
       throw new IllegalStateException(s"no count store at $dir"))
     requireModern(spark, dir, allVs)
-    if (readChain(spark, dir).size > maxChain) compact(spark, dir)
+    if (ledger.readChain(spark, dir).size > maxChain) compact(spark, dir)
     else stats(spark, dir, cur)
   }
 
@@ -620,15 +482,8 @@ object FreqStore {
     * maintenance) and keep `keepHistory >= 1`. An explicit external
     * re-send protocol needs a deeper history still.
     */
-  def gc(spark: SparkSession, dir: String, keepHistory: Int = 0): Seq[Long] = {
-    require(keepHistory >= 0, s"keepHistory must be >= 0: $keepHistory")
-    val f = fs(spark, dir)
-    val chain = readChain(spark, dir).toSet
-    val doomed = listVersions(spark, dir).filterNot(chain).dropRight(keepHistory)
-    doomed.foreach(v => f.delete(new Path(versionPath(dir, v)), true))
-    doomed.foreach(v => metaCache.remove(s"$dir|$v"))
-    doomed
-  }
+  def gc(spark: SparkSession, dir: String, keepHistory: Int = 0): Seq[Long] =
+    ledger.gc(spark, dir, keepHistory)
 
   /** Fold the base+delta chain into one base version. The additive
     * invariant is checked before publish: total occurrences are
@@ -640,19 +495,12 @@ object FreqStore {
     val cur = allVs.lastOption.getOrElse(
       throw new IllegalStateException(s"no count store at $dir"))
     requireModern(spark, dir, allVs)
-    if (readChain(spark, dir).size <= 1) return stats(spark, dir, cur)
+    if (ledger.readChain(spark, dir).size <= 1) return stats(spark, dir, cur)
     val fam = storeFamily(spark, dir)
     val before = stats(spark, dir, cur)
     val staging = stage(
       spark, dir, cur + 1, "base", fam, counts(spark, dir), before.totalDocs)
-    val staged = stagedMeta(spark, dir, staging)
-    if (staged.nt != before.totalTokens) {
-      fs(spark, dir).delete(staging, true)
-      throw new IllegalStateException(
-        s"compaction would CHANGE the view (chain Σn=${before.totalTokens}, " +
-          s"staged Σn=${staged.nt}) — aborted")
-    }
-    commit(spark, dir, staging, cur + 1)
+    ledger.commitIfUnchanged(spark, dir, staging, cur + 1, before.totalTokens)(_.nt)
     stats(spark, dir, cur + 1)
   }
 }

@@ -20,7 +20,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * .option("path", dir).mode("append").save()` stages every task's
   * output, and the driver-side `BatchWrite.commit(messages)` assembles
   * ONLY task-committed files and publishes them as the next `v=N`
-  * snapshot through [[CasProtocol.claim]] — marker-last, atomic rename on
+  * snapshot through its [[Ledger]] — marker-last, atomic rename on
   * HDFS/POSIX, conditional-put claim on object stores, exactly like
   * CatalogStore/FreqStore/DedupIndex/IvfIndex.
   *
@@ -58,21 +58,20 @@ class VersionedSink extends TableProvider {
 }
 
 object VersionedSink {
-  private val locks = new java.util.concurrent.ConcurrentHashMap[String, Object]()
-  private[sources] def lockFor(dir: String): Object =
-    locks.computeIfAbsent(dir, _ => new Object)
+  private val MarkerRe = """\{"version":(\d+),"rows":(\d+),"parts":(\d+)\}""".r
+
+  /** Every snapshot is complete, so the chain is the latest version; the
+    * marker records (version, rows, parts).
+    */
+  private[sources] val ledger = new Ledger[(Long, Long, Long)](
+    "versioned sink", "versioned sink write",
+    { case (v, rows, parts) => s"""{"version":$v,"rows":$rows,"parts":$parts}""" },
+    { case MarkerRe(v, rows, parts) => Some((v.toLong, rows.toLong, parts.toLong)); case _ => None },
+    _ => true)
 
   /** Largest committed version under `dir`, 0 if none. */
-  def latestVersion(spark: SparkSession, dir: String): Long = {
-    val f = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!f.exists(new Path(dir))) return 0L
-    f.listStatus(new Path(dir)).toSeq
-      .filter(_.isDirectory)
-      .map(_.getPath.getName)
-      .collect { case n if n.startsWith("v=") => n.stripPrefix("v=").toLong }
-      .filter(v => f.exists(new Path(s"$dir/v=$v/${CasProtocol.Marker}")))
-      .sorted.lastOption.getOrElse(0L)
-  }
+  def latestVersion(spark: SparkSession, dir: String): Long =
+    ledger.currentVersion(spark, dir).getOrElse(0L)
 }
 
 private[sources] class VersionedSinkTable(dir: String, writeSchema: StructType)
@@ -130,22 +129,7 @@ private[sources] class VersionedBatchWrite(dir: String, schema: StructType) exte
       }
       rows += pf.rows
     }
-    val lock = VersionedSink.lockFor(dir)
-    // version selection must be atomic with the claim for in-JVM writers
-    // to land on consecutive versions; JVM monitors are reentrant, so
-    // claim's own sync on the same lock nests cleanly
-    lock.synchronized {
-      val version = VersionedSink.latestVersion(spark, dir) + 1
-      val dst = new Path(s"$dir/v=$version")
-      val marker = new Path(staging, CasProtocol.Marker)
-      val out = f.create(marker, false)
-      out.write(s"""{"version":$version,"rows":$rows,"parts":${messages.length}}""".getBytes("UTF-8"))
-      out.close()
-      CasProtocol.claim(
-        spark, dir, staging, dst, version, lock,
-        committed = () => f.exists(new Path(dst, CasProtocol.Marker)),
-        what = s"versioned sink write $writeId")
-    }
+    VersionedSink.ledger.commitNext(spark, dir, staging)(v => (v, rows, messages.length.toLong))
     // drop the now-empty write staging area
     CasProtocol.dropStaging(f, new Path(s"$dir/_staging/$writeId"))
   }
